@@ -56,11 +56,12 @@ def main() -> None:
     from myduckdb_spark.session import get_spark
 
     spark = get_spark("bench")
-    # bench variants: identical query shapes with plain-double float
-    # aggregation on BOTH engines (the registered builders decimal-cast
-    # those aggregates solely for the driver's exact hash-compare —
-    # ~4x slower and not what a user of either engine writes; see
-    # queries/bench_variants.py). Correctness always runs the exact pair.
+    # one builder serves both aggregation modes (functions/compat.py):
+    # bench_queries() runs it in float mode, summing plain doubles on
+    # BOTH engines. The exact mode's decimal casts exist only for the
+    # exact hash-compare against the oracle and cost about 4x on q01 at
+    # sf1 — not what a user of either engine writes. Correctness runs
+    # exact mode.
     bq = q.bench_queries()
     all_q = {n: b for n, (b, _o) in bq.items()}
     oracles = {n: o for n, (_b, o) in bq.items() if o is not None}

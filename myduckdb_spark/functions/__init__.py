@@ -2,6 +2,7 @@
 src/core_functions/function_list.cpp registers 382 names).
 
 ``registry`` maps DuckDB function names onto Spark Column builders;
-``compat`` holds oracle-exactness helpers (decimal-cast aggregation so
-floating-point results are order-independent and engine-identical).
+``compat`` holds the money/ratio aggregation helpers: decimal-cast
+(order-independent, engine-identical) in the default exact mode, plain
+doubles in the benchmarks' float mode.
 """

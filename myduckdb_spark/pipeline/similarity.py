@@ -65,37 +65,20 @@ _NUMPY_SCORE_MIN_PAIRS = int(
 )
 
 
-def _round_half_up_i64(t):
-    """Vectorized replica of Spark's round(double) → BIGINT.
-
-    Spark's Round is HALF_UP on BigDecimal(Double.toString(t)). For
-    |t| < 2^52 every half-integer X.5 is exactly representable as a
-    double, so the shortest decimal repr of t crosses an X.5 boundary iff
-    t itself does — HALF_UP on the string equals HALF_UP on the true
-    binary value, which this computes exactly: frac = t - floor(t) is an
-    exact float op, and the away-from-zero tie goes up on frac >= 0.5."""
-    import numpy as np
-
-    a = np.abs(t)
-    fl = np.floor(a)
-    r = fl + (a - fl >= 0.5)
-    return (np.sign(t) * r).astype(np.int64)
-
-
 def _numpy_pair_dots(c: DataFrame, probe_rows, dim: int) -> DataFrame:
     """All (corpus row × probe) scaled-integer dot products, computed by
     numpy on whole Arrow batches (guide §4.2) — BIT-IDENTICAL to
     `dot_scaled_long_expr`: per element, (x·y) then ·1e15 are the same
-    two IEEE float64 ops; the HALF_UP rounding matches Spark's (see
-    `_round_half_up_i64`); the int64 per-pair sum is the same exact long
-    arithmetic. Division by the norms and the final round(·, 6) stay in
-    the JVM so every downstream float op is byte-for-byte the old plan."""
+    two IEEE float64 ops; the HALF_UP rounding matches Spark's (argued
+    at the rounding loop in `score`); the int64 per-pair sum is the same
+    exact long arithmetic. Division by the norms and the final
+    round(·, 6) stay in the JVM so every downstream float op is
+    byte-for-byte the old plan."""
     import numpy as np
 
     pid = np.asarray([r["probe_id"] for r in probe_rows], dtype=np.int64)
     pm = np.asarray([r["pv"] for r in probe_rows], dtype=np.float64)
     pn = np.asarray([r["p_norm"] for r in probe_rows], dtype=np.float64)
-    npr = len(pid)
     bc = c.sparkSession.sparkContext.broadcast((pid, pm, pn))
 
     def score(batches):
@@ -132,6 +115,14 @@ def _numpy_pair_dots(c: DataFrame, probe_rows, dim: int) -> DataFrame:
                     # (x·y)·1e15 — the same two IEEE ops as the JVM HOF
                     np.multiply(cc[:, j:j + 1], pm_t[j][None, :], out=t)
                     np.multiply(t, 1e15, out=t)
+                    # round(t) → BIGINT as Spark computes it: HALF_UP on
+                    # BigDecimal(Double.toString(t)). For |t| < 2^52 every
+                    # half-integer X.5 is exactly representable, so the
+                    # shortest decimal repr of t crosses an X.5 boundary
+                    # iff t itself does — HALF_UP on the string equals
+                    # HALF_UP on the binary value, computed exactly below:
+                    # frac = |t| - floor(|t|) is an exact float op, and the
+                    # away-from-zero tie goes up on frac >= 0.5
                     neg = t < 0
                     np.abs(t, out=t)
                     np.floor(t, out=fl)

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from myduckdb_spark.catalog import load_table
 from myduckdb_spark.catalog import maybe_broadcast as _mb
-from myduckdb_spark.functions.compat import DEC, dsum, dsum_sql
+from myduckdb_spark.functions.compat import dsum, dsum_sql
 from myduckdb_spark.operators.ordering import sorted_tiny
 from myduckdb_spark.queries import register
 
@@ -48,7 +48,7 @@ def agg_distinct_and_filter(spark, sf_dir):
 
 @register(
     "agg_rollup",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT o_orderstatus, o_orderpriority,
            GROUPING(o_orderstatus, o_orderpriority) AS gid,
            COUNT(*) AS n, {dsum_sql('o_totalprice', 'total')}

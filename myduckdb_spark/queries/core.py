@@ -14,15 +14,7 @@ from pyspark.sql import functions as F
 
 from myduckdb_spark.catalog import load_table
 from myduckdb_spark.catalog import maybe_broadcast as _mb
-from myduckdb_spark.functions.compat import (
-    DEC,
-    REVENUE_SQL,
-    davg,
-    davg_sql,
-    dsum,
-    dsum_sql,
-    revenue_col,
-)
+from myduckdb_spark.functions.compat import davg, davg_sql, dsum, dsum_sql, revenue
 from myduckdb_spark.catalog import table_row_count
 from myduckdb_spark.operators.groupjoin import group_join
 from myduckdb_spark.operators.joins import amus_join
@@ -32,7 +24,7 @@ from myduckdb_spark.queries import register
 
 @register(
     "q01_pricing_summary",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT l_returnflag, l_linestatus,
            {dsum_sql('l_quantity', 'sum_qty')},
            {dsum_sql('l_extendedprice', 'sum_base_price')},
@@ -54,20 +46,14 @@ def q01_pricing_summary(spark, sf_dir):
     HASH_GROUP_BY (physical_hash_aggregate.cpp); Spark runs partial+final
     hash agg with the filter pushed to the parquet scan."""
     li = load_table(spark, sf_dir, "lineitem")
-    disc_price = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(DEC)
-    charge = (
-        F.col("l_extendedprice")
-        * (F.lit(1.0) - F.col("l_discount"))
-        * (F.lit(1.0) + F.col("l_tax"))
-    ).cast(DEC)
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             dsum("l_quantity", "sum_qty"),
             dsum("l_extendedprice", "sum_base_price"),
-            F.sum(disc_price).cast("double").alias("sum_disc_price"),
-            F.sum(charge).cast("double").alias("sum_charge"),
+            dsum(revenue(), "sum_disc_price"),
+            dsum(revenue() * (F.lit(1.0) + F.col("l_tax")), "sum_charge"),
             davg("l_quantity", "avg_qty"),
             davg("l_extendedprice", "avg_price"),
             davg("l_discount", "avg_disc"),
@@ -81,7 +67,7 @@ def q01_pricing_summary(spark, sf_dir):
 
 @register(
     "q03_top_revenue_orders",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT l_orderkey,
            {dsum_sql('l_extendedprice * (1 - l_discount)', 'revenue')},
            o_orderdate
@@ -111,7 +97,7 @@ def q03_top_revenue_orders(spark, sf_dir):
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(_mb(cust, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.sum(revenue_col()).cast("double").alias("revenue"))
+        .agg(dsum(revenue(), "revenue"))
         .select("l_orderkey", "revenue", "o_orderdate")
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
         .limit(10)
@@ -120,7 +106,7 @@ def q03_top_revenue_orders(spark, sf_dir):
 
 @register(
     "q05_local_supplier_volume",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT n_name, {dsum_sql('l_extendedprice * (1 - l_discount)', 'revenue')}
     FROM customer, orders, lineitem, supplier, nation, region
     WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
@@ -158,7 +144,7 @@ def q05_local_supplier_volume(spark, sf_dir):
         .join(_mb(nation, sf_dir, "nation"), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(_mb(region, sf_dir, "region"), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
-        .agg(F.sum(revenue_col()).cast("double").alias("revenue"))
+        .agg(dsum(revenue(), "revenue"))
         # one row per nation of one region at ANY scale (§2.4)
         .transform(sorted_tiny, F.col("revenue").desc(), F.col("n_name"))
     )
@@ -166,8 +152,8 @@ def q05_local_supplier_volume(spark, sf_dir):
 
 @register(
     "q06_forecast_revenue",
-    oracle="""
-    SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
+    oracle=lambda: f"""
+    SELECT {dsum_sql('l_extendedprice * l_discount', 'revenue')},
            COUNT(*) AS n_rows
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -189,16 +175,14 @@ def q06_forecast_revenue(spark, sf_dir):
         & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24)
     ).agg(
-        F.sum((F.col("l_extendedprice") * F.col("l_discount")).cast(DEC))
-        .cast("double")
-        .alias("revenue"),
+        dsum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
 
 @register(
     "q10_returned_items",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT c_custkey, c_name,
            {dsum_sql('l_extendedprice * (1 - l_discount)', 'revenue')},
            CAST(c_acctbal AS DOUBLE) AS c_acctbal, n_name
@@ -227,7 +211,7 @@ def q10_returned_items(spark, sf_dir):
         .join(_mb(customer, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
         .join(_mb(nation, sf_dir, "nation"), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.sum(revenue_col()).cast("double").alias("revenue"))
+        .agg(dsum(revenue(), "revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
         .limit(20)
@@ -236,12 +220,12 @@ def q10_returned_items(spark, sf_dir):
 
 @register(
     "groupjoin_order_items",
-    oracle="""
+    oracle=lambda: f"""
     SELECT o.o_orderkey, o.o_totalprice, agg.n_items, agg.total_qty
     FROM orders o
     JOIN (
       SELECT l_orderkey, COUNT(*) AS n_items,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS total_qty
+             {dsum_sql('l_quantity', 'total_qty')}
       FROM lineitem GROUP BY l_orderkey
     ) agg ON o.o_orderkey = agg.l_orderkey
     ORDER BY o.o_orderkey

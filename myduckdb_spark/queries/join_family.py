@@ -194,7 +194,7 @@ def join_positional(spark, sf_dir):
 
 @register(
     "join_range_theta",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT o.o_orderstatus, COUNT(*) AS n_lines,
            {dsum_sql('l.l_quantity', 'qty')}
     FROM orders o JOIN lineitem l

@@ -19,9 +19,19 @@ def con():
     return c
 
 
-@pytest.mark.parametrize("name", sorted(q.oracle_sql()))
+# every registered oracle, plus each bench_queries() oracle that is not
+# one of them (the float-mode texts), as "bench-<name>"
+ORACLES = dict(q.oracle_sql())
+ORACLES.update({
+    f"bench-{n}": o
+    for n, (_b, o) in q.bench_queries().items()
+    if o is not None and o != ORACLES.get(n)
+})
+
+
+@pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_plans(con, name):
-    con.sql("EXPLAIN " + q.oracle_sql()[name])
+    con.sql("EXPLAIN " + ORACLES[name])
 
 
 def test_every_query_is_callable():

@@ -3,9 +3,11 @@
 Writes plans/<tag>/<query>_<suffix>.txt (default suffix from argv).
 Usage: python tools/capture_plans.py before|after [query ...]
 
-Captures the BENCH variant plan (what bench.py times); queries without a
-bench variant fall back to the registered builder — the same thing
-bench.py executes either way.
+Captures the plan bench.py times: the ``bench_queries()`` builder. That
+is the one registered builder, run in float aggregation mode for the
+queries that have one (plain double sums instead of the decimal casts
+that exist only for the exact oracle hash and cost about 4x on q01 at
+sf1; see functions/compat.py), else in the exact mode ``queries()`` uses.
 """
 
 from __future__ import annotations
@@ -13,7 +15,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 TAG = os.environ.get("SPARK_GRAFT_PLANS_TAG", "r10")

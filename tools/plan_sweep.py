@@ -26,6 +26,11 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SWEEP_DIR", "/root/testdata/sf0.01")
+# a shuffle, as the physical plan's tree string names it (BroadcastExchange
+# and ReusedExchange are other node names; tests/test_plans.py counts the same)
+SHUFFLE_EXCHANGE = (
+    r"\bExchange (hashpartitioning|rangepartitioning|SinglePartition|RoundRobinPartitioning)"
+)
 
 
 def main() -> None:
@@ -43,15 +48,15 @@ def main() -> None:
         try:
             df = builder(spark, SF_DIR)
             plan = df._jdf.queryExecution().explainString(mode)
+            tree = df._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # builder needs fixtures the sweep lacks
             results.append({"name": name, "error": str(e)[:200]})
             print(f"ERR  {name}: {str(e)[:120]}", file=sys.stderr, flush=True)
             continue
         rec = {
             "name": name,
-            "exchanges": len(re.findall(r"\bExchange\b", plan.split("==", 2)[-1]))
-            - len(re.findall(r"BroadcastExchange", plan)),
-            "broadcast_exchanges": len(re.findall(r"BroadcastExchange", plan)),
+            "exchanges": len(re.findall(SHUFFLE_EXCHANGE, tree)),
+            "broadcast_exchanges": len(re.findall(r"\bBroadcastExchange\b", tree)),
             "batch_eval_python": len(re.findall(r"BatchEvalPython", plan)),
             "arrow_eval_python": len(re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan)),
             "cartesian": len(re.findall(r"CartesianProduct", plan)),
